@@ -73,6 +73,7 @@ import warnings
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import types as T
 
 from dlx_spark import config, fsio, schemas
 from dlx_spark.marc import dataframe as mdf
@@ -89,7 +90,8 @@ from dlx_spark.marc.record import (
 )
 from dlx_spark.tableio import ConcurrentWriteError
 from dlx_spark.tableio_mor import DELETED as _MOR_DELETED
-from dlx_spark.tableio_mor import MergeOnReadTable
+from dlx_spark.tableio_mor import (ISIN_MAX_KEYS, MergeOnReadTable,
+                                   isin_literals)
 from dlx_spark.tableio_versioned import VersionedTableBackend
 
 
@@ -842,15 +844,6 @@ class MarcStore:
                 [(int(i),) for i in removed_ids], "record_id long")
             tokens.upsert(tombstone_keys=stones)
 
-    #: affected-record sets up to this size are collected to the driver
-    #: and pushed into the live scan as an ``_id IN (...)`` predicate
-    #: plus pt-bucket partition pruning — a semi-join alone cannot
-    #: reach the scan, so without this the repair reads every record's
-    #: nested datafields (measured 22.4 s at 1M for ~1000 attached).
-    #: 100k longs ≈ 1 MB on the driver; past the cap the repair keeps
-    #: the join formulation (scan-heavy but never driver-unsafe).
-    XREF_REPAIR_ISIN_MAX = 100_000
-
     def _refresh_tokens_for_xrefs(self, record_type: str,
                                   xrefs: list[int]) -> None:
         """Refresh the token rows of every record LINKING to the given
@@ -875,7 +868,14 @@ class MarcStore:
                     .join(F.broadcast(xdf), F.col("xref") == F.col("x"),
                           "leftsemi")
                     .select(F.col("record_id").alias("_id")).distinct())
-        cap = self.XREF_REPAIR_ISIN_MAX
+        # affected-record sets up to the shared IN-list bound are
+        # collected to the driver and pushed into the live scan as an
+        # ``_id IN (...)`` predicate plus pt-bucket partition pruning —
+        # a semi-join alone cannot reach the scan, so without this the
+        # repair reads every record's nested datafields (measured
+        # 22.4 s at 1M for ~1000 attached).  Past the bound the repair
+        # keeps the join formulation (scan-heavy, never driver-unsafe)
+        cap = ISIN_MAX_KEYS
         head = affected.limit(cap + 1).collect()
         if len(head) <= cap:
             ids = sorted(int(r["_id"]) for r in head)
@@ -884,7 +884,7 @@ class MarcStore:
             n = self.n_buckets(record_type)
             raw = (self._raw(record_type)
                    .filter(F.col("pt").isin(sorted({i % n for i in ids}))
-                           & F.col("_id").isin(ids))
+                           & isin_literals("_id", ids, T.LongType()))
                    .drop("pt"))
             batch = raw
             stones = self.spark.createDataFrame(

@@ -81,7 +81,7 @@ import json
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from dlx_spark import fsio
@@ -117,6 +117,13 @@ class VersionedTableBackend(ParquetTableBackend):
         #: suffix (see MINOR_COMPACT_MAX_SUFFIX_FRACTION)
         self.auto_compactions = 0
         self.auto_compactions_minor = 0
+        #: segment id -> row count (see ``segment_rows``); insertion
+        #: ordered so the oldest entries go first past the cap
+        self._segment_rows: dict[str, int] = {}
+
+    #: ``segment_rows`` memo entries kept (~100 bytes each); past this
+    #: the oldest half is dropped and re-derived from footers if needed
+    SEGMENT_ROWS_MEMO_MAX = 4096
 
     # ---------------------------------------------------------- paths
 
@@ -285,6 +292,12 @@ class VersionedTableBackend(ParquetTableBackend):
         # plan tests pin "bibs_tokens" in scan paths); uniqueness still
         # comes from the uuid
         seg = (seg_prefix + "-" if seg_prefix else "") + uuid.uuid4().hex
+        # the segment's row count rides on the write itself: an
+        # Observation is filled by the write's own job(s), so readers
+        # gating on delta sizes (tableio_mor) pay no count job for the
+        # segments this process wrote
+        obs = Observation()
+        df = df.observe(obs, F.count(F.lit(1)).alias("n"))
         if partition_cols:
             # hive-partitioned segment dirs: readers resolving the
             # manifest get listing-time partition pruning per segment.
@@ -301,14 +314,41 @@ class VersionedTableBackend(ParquetTableBackend):
                 out = out.sortWithinPartitions(*partition_cols, sort_col)
             (out.write.partitionBy(*partition_cols)
              .parquet(self._data_dir(spark, seg)))
-            return seg
-        if key is not None:
-            # clustered layout: balanced, sorted segment files (no
-            # catalog bucket metadata — see module docstring trade-off)
-            df = df.repartition(n_buckets, F.col(key)) \
-                   .sortWithinPartitions(key)
-        df.write.parquet(self._data_dir(spark, seg))
+        else:
+            if key is not None:
+                # clustered layout: balanced, sorted segment files (no
+                # catalog bucket metadata — see module docstring
+                # trade-off)
+                df = df.repartition(n_buckets, F.col(key)) \
+                       .sortWithinPartitions(key)
+            df.write.parquet(self._data_dir(spark, seg))
+        # never block on a write that delivered no metrics: the count
+        # is then re-derived from footers on demand
+        if obs._jo.future().isCompleted():
+            self._remember_rows(seg, int(obs.get["n"]))
         return seg
+
+    def _remember_rows(self, seg: str, n: int) -> None:
+        memo = self._segment_rows
+        if len(memo) >= self.SEGMENT_ROWS_MEMO_MAX:
+            for old in list(memo)[:len(memo) // 2]:
+                memo.pop(old, None)
+        memo[seg] = n
+
+    def segment_rows(self, spark: SparkSession, manifest: dict,
+                     index: int) -> int:
+        """Rows in one segment of ``manifest``.  Segments are immutable,
+        so the count is memoized per segment id: filled for free by the
+        writes of this process (see ``_write_segment``), and by one
+        footer-only zero-column count for segments written elsewhere.
+        An Observation that over-counts (a retried task) only errs
+        toward the size gates' safe side."""
+        seg = manifest["segments"][index]
+        n = self._segment_rows.get(seg)
+        if n is None:
+            n = self.segment_df(spark, manifest, index).count()
+            self._remember_rows(seg, n)
+        return n
 
     @staticmethod
     def _layout(df: DataFrame, key: str | None,
@@ -490,7 +530,7 @@ class VersionedTableBackend(ParquetTableBackend):
     def _should_minor_compact(self, spark: SparkSession,
                               table: str) -> bool:
         """True when the appended suffix is small relative to segment 0
-        (footer-only zero-column counts — cheap) so a suffix fold keeps
+        (memoized per-segment counts — cheap) so a suffix fold keeps
         maintenance O(suffix); tiny or rewrite-heavy tables stay on the
         full fold, which also merges the base's small files."""
         try:
@@ -500,8 +540,8 @@ class VersionedTableBackend(ParquetTableBackend):
         segs = manifest["segments"]
         if len(segs) <= 2:
             return False
-        base = self.segment_df(spark, manifest, 0).count()
-        suffix = sum(self.segment_df(spark, manifest, i).count()
+        base = self.segment_rows(spark, manifest, 0)
+        suffix = sum(self.segment_rows(spark, manifest, i)
                      for i in range(1, len(segs)))
         return suffix <= base * self.MINOR_COMPACT_MAX_SUFFIX_FRACTION
 

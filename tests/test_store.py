@@ -1,11 +1,14 @@
 """Write-path tests: commit/history/delete/restore/merge/propagation
 (reference tests/test_marc.py:79-242, 977-1053 patterns)."""
 
+import re
+import uuid
 from datetime import datetime
 
 import pytest
 from pyspark.sql import functions as F
 
+from dlx_spark import plans
 from dlx_spark.marc import Auth, AuthInUse, Bib
 from dlx_spark.marc.store import MarcStore
 
@@ -1019,10 +1022,10 @@ def test_keyset_pagination_after_id(store):
     assert skip_page == pages[1]
 
     # the cursor predicate reaches the scan (row-group skipping on the
-    # key-sorted segments is what makes deep pages O(page))
-    plan = (store.search("bib", "245__a:keyset", limit=3,
-                         after_id=want[5])
-            ._jdf.queryExecution().executedPlan().toString())
+    # key-sorted segments is what makes deep pages O(page)); the
+    # formatted plan lists pushed filters untruncated
+    plan = plans.simple_plan(store.search("bib", "245__a:keyset", limit=3,
+                                          after_id=want[5]))
     assert "GreaterThan(_id" in plan
 
     # keyset and offset paging are mutually exclusive
@@ -1030,3 +1033,53 @@ def test_keyset_pagination_after_id(store):
         store.search("bib", "245__a:keyset", skip=2, after_id=1)
     with pytest.raises(ValueError, match="keyset"):
         store.search("bib", "245__a:keyset", sort=["updated"], after_id=1)
+
+
+def _jobs_run(spark, fn) -> int:
+    """Spark jobs ``fn`` runs, counted under a job group of its own."""
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_get_after_commit_runs_at_most_two_jobs(store, spark):
+    """A point read of a store one delta segment past its base runs the
+    read itself plus, once per segment list, the collect of the delta's
+    keys — no count job (the commit observed the delta's row count) and
+    no broadcast jobs.  A repeat read of the same state runs one job."""
+    rec = store.get("bib", 1)
+    rec.set("245", "a", "Edited title", auth_control=False)
+    store.commit([rec], user="e", now=T1, auth_check=False)
+    assert len(store._live("bib").segments(spark)) == 2
+
+    got = []
+    assert _jobs_run(spark, lambda: got.append(store.get("bib", 1))) <= 2
+    assert _jobs_run(spark, lambda: got.append(store.get("bib", 1))) == 1
+    assert [r.get_value("245", "a") for r in got] == ["Edited title"] * 2
+
+
+def test_keyset_cursor_reaches_every_segment_scan(store, spark):
+    """On a delta-fragmented store a keyset page is a union of filtered
+    base and delta scans; the ``after_id`` predicate must reach the
+    parquet reader of EVERY one of them, so deep pages skip row groups
+    in the deltas as well as in the base."""
+    for wave in range(2):
+        store.commit([Bib().set("245", "a", f"Keyset w{wave} {i}",
+                                auth_control=False) for i in range(4)],
+                     user="p", now=T1, auth_check=False)
+    n_segs = len(store._live("bib").segments(spark))
+    assert n_segs == 3
+    df = store.search("bib", "title:keyset", limit=3, after_id=4)
+    assert [r["_id"] for r in df.select("_id").collect()] == [5, 6, 7]
+    plan = plans.simple_plan(df)
+    live_scans = [blk for blk in plan.split("\n\n")
+                  if re.search(r"/data/bibs-[0-9a-f]{32}\]", blk)]
+    assert len(live_scans) == n_segs, plan
+    for blk in live_scans:
+        pushed = re.search(r"PushedFilters: (.*)", blk).group(1)
+        assert "GreaterThan(_id,4)" in pushed, blk

@@ -1,7 +1,8 @@
 """MergeOnReadTable contract: O(batch) upserts, segment-order key
 precedence, tombstones, compaction, geometry metadata, and the plan
-shapes that make resolution scale (base never shuffled, delta key set
-broadcast, partition filters pruning base AND delta scans)."""
+shapes that make resolution scale (base never shuffled, batch-sized
+deltas resolved by key filters and larger ones by a broadcast join,
+partition filters pruning base AND delta scans)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -122,24 +123,47 @@ def test_auto_compact_bounds_segments(spark, be):
         (10 + i, f"n{i}") for i in range(5)]
 
 
+def _pruned_scans(plan):
+    """Scan detail blocks of a formatted plan whose PartitionFilters
+    carry a ``pt`` predicate."""
+    pf = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
+    return [ln for ln in pf if "pt" in ln.split("PartitionFilters")[1][:80]]
+
+
 def test_resolution_plan_base_not_shuffled_and_keys_broadcast(spark, be):
-    """The 100 TB contract: resolving base-vs-delta must broadcast the
-    delta key set (never shuffle/sort the base side) and keep partition
-    filters pruning BOTH scans."""
+    """The 100 TB contract, per resolution branch: the base is never
+    shuffled or sorted, and partition filters prune the base AND the
+    delta scans.  A batch-sized delta resolves with literal key filters
+    (no join, no exchange at all); past ISIN_MAX_DELTA_ROWS the delta
+    key set is broadcast; past BROADCAST_MAX_DELTA_ROWS the join is
+    unhinted."""
     t = MergeOnReadTable(be, "t5", key="k", partition_cols=["pt"])
     t.overwrite(_rows(spark, [(i, f"v{i}") for i in range(64)]))
     t.upsert(rows=_rows(spark, [(1, "V")]))
-    df = t.read(spark).filter(F.col("pt") == 1)
-    plan = plans.simple_plan(df)
-    assert "SortMergeJoin" not in plan
+    want = [(i, "V" if i == 1 else f"v{i}") for i in range(64) if i % 4 == 1]
+
+    def pinned():
+        df = t.read(spark).filter(F.col("pt") == 1)
+        plan = plans.simple_plan(df)
+        assert "SortMergeJoin" not in plan
+        assert "CartesianProduct" not in plan and "NestedLoop" not in plan
+        assert len(_pruned_scans(plan)) >= 2, plan  # base AND delta
+        assert sorted((r["k"], r["v"]) for r in df.collect()) == want
+        return plan
+
+    plan = pinned()                                 # literal filters
+    assert "Join" not in plan and "Exchange" not in plan, plan
+
+    t.ISIN_MAX_DELTA_ROWS = 0                       # forced broadcast
+    plan = pinned()
     assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan and "NestedLoop" not in plan
-    pf = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-    pruned = [ln for ln in pf if "pt" in ln.split("PartitionFilters")[1][:80]]
-    assert len(pruned) >= 2, plan               # base AND delta scans pruned
-    assert sorted(r["k"] for r in df.collect()) == [
-        i for i in range(64) if i % 4 == 1]
-    assert [r["v"] for r in df.collect() if r["k"] == 1] == ["V"]
+    analyzed = t.read(spark)._jdf.queryExecution().analyzed().toString()
+    assert "Hint" in analyzed
+
+    t.BROADCAST_MAX_DELTA_ROWS = 0                  # unhinted
+    pinned()
+    analyzed = t.read(spark)._jdf.queryExecution().analyzed().toString()
+    assert "Hint" not in analyzed and "Join" in analyzed
 
 
 @pytest.mark.slow
@@ -199,11 +223,12 @@ def test_snapshot_reader_survives_compaction(spark, be):
 
 @pytest.mark.slow
 def test_huge_delta_disables_forced_broadcast(spark, be):
-    """The forced broadcast of the delta key set assumes batch-sized
-    deltas; a bulk-ingest delta above BROADCAST_MAX_DELTA_ROWS must
-    resolve UNHINTED (Catalyst/AQE picks — shuffling the base once is
-    correct, collecting 10^8 keys to the driver is not), with identical
-    results."""
+    """Each size gate moves resolution to the next plan with identical
+    results: literal key filters for a batch-sized delta, the forced
+    broadcast of the delta key set past ISIN_MAX_DELTA_ROWS, and an
+    UNHINTED join past BROADCAST_MAX_DELTA_ROWS (Catalyst/AQE picks —
+    shuffling the base once is correct, collecting 10^8 keys to the
+    driver is not)."""
     t = MergeOnReadTable(be, "t10", key="k", partition_cols=["pt"])
     t.overwrite(_rows(spark, [(i, f"v{i}") for i in range(8)]))
     t.upsert(rows=_rows(spark, [(1, "V"), (2, "W")]))
@@ -211,18 +236,25 @@ def test_huge_delta_disables_forced_broadcast(spark, be):
     def analyzed(df):
         return df._jdf.queryExecution().analyzed().toString()
 
-    assert "Hint" in analyzed(t.read(spark))      # small delta: forced
+    expect = sorted([(1, "V"), (2, "W")] + [
+        (i, f"v{i}") for i in range(8) if i not in (1, 2)])
+    plan = analyzed(t.read(spark))                # small delta: filters
+    assert "Join" not in plan and "Hint" not in plan
+    assert _read_sorted(t, spark) == expect
+    t.ISIN_MAX_DELTA_ROWS = 1                     # past the literal cap
+    assert "Hint" in analyzed(t.read(spark))      # forced broadcast
+    assert _read_sorted(t, spark) == expect
     t.BROADCAST_MAX_DELTA_ROWS = 1                # now "too big"
-    assert "Hint" not in analyzed(t.read(spark))
-    expect = [(1, "V"), (2, "W")] + [
-        (i, f"v{i}") for i in range(8) if i not in (1, 2)]
-    assert _read_sorted(t, spark) == sorted(expect)
-    # the guard's count is memoized per segment list: a new commit
-    # invalidates it, and a delta back under the ceiling re-broadcasts
+    plan = analyzed(t.read(spark))
+    assert "Hint" not in plan and "Join" in plan
+    assert _read_sorted(t, spark) == expect
+    # the gates re-evaluate per segment list: after a compact and a
+    # commit back under both ceilings, reads use key filters again
     t.BROADCAST_MAX_DELTA_ROWS = MergeOnReadTable.BROADCAST_MAX_DELTA_ROWS
+    t.ISIN_MAX_DELTA_ROWS = MergeOnReadTable.ISIN_MAX_DELTA_ROWS
     t.compact(spark)
     t.upsert(rows=_rows(spark, [(3, "X")]))
-    assert "Hint" in analyzed(t.read(spark))
+    assert "Join" not in analyzed(t.read(spark))
     assert (3, "X") in _read_sorted(t, spark)
 
 
@@ -496,3 +528,73 @@ def test_vacuum_reclaims_minor_folded_deltas(spark, be):
     assert set(folded) <= reclaimed
     assert not keep & reclaimed
     assert _read_sorted(t, spark) == want
+
+
+# ------------------------------------------- literal vs join resolution
+
+def _state(t, spark):
+    return sorted(((r["k"], r["v"]) for r in t.read(spark).collect()),
+                  key=lambda kv: (kv[0] is None, kv[0] or 0, kv[1] or ""))
+
+
+def _merged(t, spark):
+    return sorted(((r["k"], r["v"], r["_mor_deleted"])
+                   for r in t._merged_deltas(spark, t.manifest(spark))
+                   .collect()),
+                  key=lambda r: (r[0], r[1] or "", r[2]))
+
+
+@pytest.mark.parametrize("seed", [3, 11])
+def test_literal_resolution_matches_join_resolution(spark, be, seed):
+    """Two readers of one table: the default resolves batch-sized
+    deltas with literal key filters, the other has the cap forced to 0
+    and joins.  Over random upsert/tombstone batches on the multi-row
+    (token-table) shape — a batch may carry a tombstone AND fresh rows
+    for one key, or only the tombstone — both return the rows of a
+    dict model after every batch, and so do the merged deltas of a
+    minor compaction and the reads after it.  Keys include negatives
+    (signed bigint literals).  A NULL key in the base is never
+    shadowed; one in a delta sends resolution to the join."""
+    import random
+
+    rng = random.Random(seed)
+    name = f"eq{seed}"
+    lit = MergeOnReadTable(be, name, key="k", partition_cols=["pt"],
+                           auto_compact_at=None)
+    join = MergeOnReadTable(be, name, key="k", partition_cols=["pt"],
+                            auto_compact_at=None)
+    join.ISIN_MAX_DELTA_ROWS = 0
+    model = {k: [f"b{k}x", f"b{k}y"] for k in range(-2, 12)}
+    lit.overwrite(_rows(spark, [(k, v) for k, vs in model.items()
+                                for v in vs] + [(None, "nokey")]))
+
+    def check():
+        want = sorted((k, v) for k, vs in model.items() for v in vs)
+        want.append((None, "nokey"))
+        assert lit._delta_keys(spark, lit.manifest(spark)) is not None
+        assert join._delta_keys(spark, join.manifest(spark)) is None
+        assert _state(lit, spark) == _state(join, spark) == want
+
+    for n in range(4):
+        keys = rng.sample(range(-4, 16), 5)
+        rows, stones = [], []
+        for k in keys:
+            new = [f"n{n}k{k}r{j}" for j in range(rng.randint(0, 3))]
+            if rng.random() < 0.7 or not new:
+                stones.append((k, None))   # replaces k's whole row set
+            rows += [(k, v) for v in new]
+            model[k] = new
+        lit.upsert(rows=_rows(spark, rows) if rows else None,
+                   tombstone_keys=_rows(spark, stones).select("k", "pt")
+                   if stones else None)
+        check()
+
+    assert _merged(lit, spark) == _merged(join, spark)
+    assert lit.compact_deltas(spark) == 4
+    check()
+    # a NULL delta key: both readers join, with identical results
+    lit.upsert(rows=_rows(spark, [(None, "late")]))
+    assert lit._delta_keys(spark, lit.manifest(spark)) is None
+    assert _state(lit, spark) == _state(join, spark)
+    assert lit.compact(spark) == 3
+    assert _state(lit, spark) == _state(join, spark)
